@@ -590,11 +590,6 @@ def _covered_positions(
     from pyspark.sql.window import Window as _W
 
     wg = _W.partitionBy("g")
-    occ = (
-        grams.withColumn("__dmin", F.min("doc_id").over(wg))
-        .withColumn("__dmax", F.max("doc_id").over(wg))
-        .filter(F.col("__dmin") != F.col("__dmax"))
-    )
     if keep_first:
         keep = F.min(F.struct(F.col("doc_id"), F.col("i"))).over(wg)
         occ = (
@@ -606,6 +601,12 @@ def _covered_positions(
                 (F.col("doc_id") != F.col("__keep.doc_id"))
                 | (F.col("i") != F.col("__keep.i"))
             )
+        )
+    else:
+        occ = (
+            grams.withColumn("__dmin", F.min("doc_id").over(wg))
+            .withColumn("__dmax", F.max("doc_id").over(wg))
+            .filter(F.col("__dmin") != F.col("__dmax"))
         )
     # repartition by doc_id BEFORE the distinct: hash-partitioning on
     # doc_id alone satisfies the distinct aggregate's clustering

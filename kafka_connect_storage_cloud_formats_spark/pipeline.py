@@ -69,25 +69,6 @@ class IngestPipeline:
                 topics_prefix=self.topics_prefix,
                 value_cols=[f.name for f in self.value_schema.fields],
             )
-        keep = [c for c in self.partition_cols if c in records.columns]
-        df = coerced.select(*keep, *value_names)
-        # Per-poll semantics without data loss: a bare mode="overwrite" at
-        # out_dir would TRUNCATE every earlier batch on the second put().
-        # Instead each batch lands in a deterministic batch=<id> subdir
-        # (id = hash of the batch's per-(topic,partition) offset ranges —
-        # Kafka batch identity) and overwrites only itself: re-running the
-        # same batch is idempotent (the reference's deterministic-name
-        # recovery, directory-granular), successive batches accumulate.
-        # Costs one metadata-scale agg job per batch.
-        #
-        # DETERMINISTIC-INPUT REQUIREMENT: the tag aggregation evaluates
-        # `records` once here and the write evaluates it again below. A
-        # non-deterministic input plan (sampling, rand()-stamped ids)
-        # could tag one materialization and write another, landing a
-        # replay under a different batch=<id> (duplicates instead of an
-        # idempotent overwrite). Kafka-envelope batches are deterministic
-        # (offsets are data); a caller feeding a non-deterministic plan
-        # must localCheckpoint/persist it before put().
         if "offset" not in records.columns:
             # Without offsets there is no batch identity: the overwrite
             # would land at out_dir itself and TRUNCATE every earlier
@@ -101,39 +82,58 @@ class IngestPipeline:
                 "sinks.orc_sink.write_orc_partitioned"
             )
         import hashlib
+        import uuid
 
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        # The tag aggregation and the write are TWO actions over `records`:
-        # unpersisted, the input plan (typically the envelope source with
-        # its per-partition offset window) executes twice per put(). Persist
-        # for exactly the span of the two actions — the tag agg populates
-        # the cache while it scans, the write reads from it (r15
-        # optimization, guide §1.6/§5.2: don't recompute a subtree two
-        # actions share). MEMORY_AND_DISK (the default) spills rather than
-        # OOMs on an oversized batch; this also hardens the deterministic-
-        # input requirement above — both actions now see ONE
-        # materialization by construction.
-        records = records.persist()
+        from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
+
+        # Per-poll semantics without data loss: each batch lands in its own
+        # batch=<tag> dir, tag = hash of its Kafka identity (count, offset
+        # range, order-independent digest of every (topic, partition,
+        # offset); a decimal sum, since ANSI overflows a long one), so
+        # batches accumulate and a replay finds its tag already published.
+        # ONE Spark action per commit: the identity is OBSERVED during the
+        # write (no exchange between CollectMetrics and the write, so each
+        # row counts once) into an underscore-prefixed staging dir readers
+        # never list, then one FS rename publishes it (ensure_artifact's
+        # discipline). Tag and files come from one evaluation of `records`.
+        # Metrics as SQL strings: one py4j call each, not one per Column.
+        ident = ", ".join(f"`{c}`" for c in ENVELOPE_COLS[1:] if c in records.columns)
+        obs = Observation()
+        observed = coerced.observe(obs, *map(F.expr, (
+            "count(1) AS n", "min(`offset`) AS lo", "max(`offset`) AS hi",
+            f"sum(CAST(xxhash64({ident}) AS DECIMAL(38, 0))) AS digest",
+        )))
+        keep = [c for c in self.partition_cols if c in records.columns]
+        staging = f"{self.out_dir}/_staging-{uuid.uuid4().hex}"
+        fs = _fs_for(staging, records.sparkSession)
+        published = False
         try:
-            id_cols = [c for c in ("topic", "partition") if c in records.columns]
-            ranges = (
-                records.groupBy(*id_cols)
-                .agg(F.min("offset"), F.max("offset"), F.count(F.lit(1)))
-                .collect()
-            )
-            tag = hashlib.md5(
-                repr(sorted(tuple(r) for r in ranges)).encode()
-            ).hexdigest()[:12]
-            batch_dir = f"{self.out_dir}/batch={tag}"
             write_orc_partitioned(
-                df,
-                batch_dir,
+                observed.select(*keep, *value_names),
+                staging,
                 partition_cols=tuple(keep),
                 max_records_per_file=self.flush_size,
             )
+            tag = hashlib.md5(repr(sorted(obs.get.items())).encode()).hexdigest()
+            # "h" prefix: partition inference reads an all-digit-and-'e' hex
+            # tag ("40e939271638") as a decimal and spins for minutes on it
+            batch_dir = f"{self.out_dir}/batch=h{tag[:12]}"
+            published = not fs.exists(batch_dir) and fs.rename(staging, batch_dir)
+            if not fs.exists(batch_dir):
+                err = fs.last_error
+                raise RuntimeError(f"publish {staging} -> {batch_dir} failed") from err
         finally:
-            records.unpersist()
+            if not published:  # a replay (content identical) or a failure
+                fs.delete(staging)
+        # A rename that lost a publish race onto an existing dir moves the
+        # staging dir INTO it (POSIX-style FS semantics): hidden by its
+        # underscore name, and identical content, so removed.
+        nested = f"{batch_dir}/{staging.rsplit('/', 1)[1]}"
+        if published and fs.exists(nested):
+            fs.delete(nested)
         return None
 
     def run_stream(self, records: DataFrame, checkpoint: str):

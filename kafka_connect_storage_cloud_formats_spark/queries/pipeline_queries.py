@@ -264,11 +264,11 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         SchemaTracker,
     )
 
-    # persist the envelope for the span of the two generation writes: four
-    # actions consume it (each run_batch's batch-identity agg + write), and
-    # unpersisted each one re-ran the events scan AND the per-partition
-    # offset window (r15 optimization, guide §1.6/§5.2). Scoped persist
-    # inside one invocation — nothing survives the query.
+    # persist the envelope for the span of the two generation writes: two
+    # actions consume it (each run_batch is one write that observes its
+    # batch identity), and unpersisted each one re-ran the events scan AND
+    # the per-partition offset window (r15 optimization, guide §1.6/§5.2).
+    # Scoped persist inside one invocation — nothing survives the query.
     env = _events_envelope(spark, sf_dir).persist()
     out = _scratch_dir("engine_schema_evo", sf_dir)
     v1 = env.filter(F.col("event_id") % 2 == 0)

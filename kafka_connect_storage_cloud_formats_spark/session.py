@@ -33,9 +33,10 @@ _SQL_CONFS: dict[str, str] = {
     # Let AQE re-plan (coalesce/skew-split) shuffles UNDER cached plans
     # too: with the default (false), any subtree materialized by
     # .persist() freezes its exchanges at the static shuffle-partition
-    # count — the scoped per-invocation persists in the ingest pipeline
-    # would otherwise run 32-task stages over kilobyte batches locally
-    # and, worse, a FIXED fan-out at any scale (r15 optimization, guide
+    # count — the scoped per-invocation persists (schema_evolution_roundtrip's
+    # shared envelope, the near-dup clustering's LSH pair stream) would
+    # otherwise run 32-task stages over kilobyte inputs locally and,
+    # worse, a FIXED fan-out at any scale (r15 optimization, guide
     # §2.5: partitioning must stay scale-adaptive). Output partitioning
     # of a cache is not part of any declared result contract.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
